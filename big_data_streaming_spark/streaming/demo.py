@@ -15,9 +15,28 @@ chained live:
       overwrites its own dir — same contract as the JDBC
       delete-then-insert sink in streaming/sinks.py).
 
+Two rules keep the per-batch fixed cost down — for batches this small
+it, not the data, is what a trigger spends its time on:
+
+* **One state-store partition.** A stateful aggregate opens and commits
+  one state store per shuffle partition on every micro-batch, and each
+  commit has a fixed cost (~100–200 ms for the HDFS-backed store). The
+  live state is O(open windows × coins) — tens of rows here, a few
+  thousand even for every Binance USDT pair — far below where one
+  store's per-row cost approaches that fixed cost, so the query starts
+  with ``spark.sql.shuffle.partitions = 1`` (set around ``start()``
+  only; the session's value is restored). The engine records the
+  partition count in the checkpoint's offset metadata and reuses it on
+  restart, so a checkpoint created with another count keeps that count.
+* **Persist once.** The ranker probes ``isEmpty`` and then writes; each
+  action would re-run the stateful plan (source read, shuffle, state
+  load and commit), so the batch is persisted before the probe and
+  unpersisted after the write (``sinks.persisted_nonempty``).
+
 Every stage is individually gate-checked elsewhere (`q_stream_feed`,
-`q_stream_window_tumbling`, `q_stream_topk`); this wires them into the
-one pipeline a reference user would actually run, pinned by
+`q_stream_window_tumbling`, `q_stream_topk` — which shares this module's
+ranker, ``sinks.window_topk_sink``); this wires them into the one
+pipeline a reference user would actually run, pinned by
 tests/test_pipeline_e2e.py::test_live_topk_demo against an exact
 python oracle of the deterministic feed.
 """
@@ -26,10 +45,11 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
-from pyspark.sql.window import Window
+
+from big_data_streaming_spark.streaming.sinks import window_topk_sink
 
 
 def run_live_topk(
@@ -73,30 +93,23 @@ def run_live_topk(
         .agg(F.sum("volume").alias("total_volume"))
     )
 
-    def rank_and_append(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        rw = Window.partitionBy("w").orderBy(F.desc("total_volume"), "coin")
-        (
-            batch_df.withColumn("rk", F.row_number().over(rw).cast("bigint"))
-            .filter(F.col("rk") <= k)
-            .select(
-                F.col("w.start").alias("window_start"),
-                "coin",
-                "total_volume",
-                "rk",
+    # One state-store partition (see the module docstring): set around
+    # start() only — the engine snapshots the value into the checkpoint's
+    # offset metadata, so the session's own setting is left as it was.
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "1")
+    try:
+        return (
+            agg.writeStream.foreachBatch(
+                window_topk_sink(out_dir, key="coin", value="total_volume", k=k)
             )
-            .write.mode("overwrite")
-            .parquet(os.path.join(out_dir, f"batch_{batch_id}"))
+            .option("checkpointLocation", checkpoint)
+            .outputMode("append")
+            .trigger(processingTime="0 seconds")
+            .start()
         )
-
-    return (
-        agg.writeStream.foreachBatch(rank_and_append)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .trigger(processingTime="0 seconds")
-        .start()
-    )
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
 def drain_until_idle(

@@ -24,12 +24,22 @@ class ProgressCollector(StreamingQueryListener):
 
     def onQueryProgress(self, event) -> None:  # noqa: N802
         p = event.progress
+        ops = p.stateOperators or []
         self.stats[p.name or p.id].append(
             {
                 "batchId": p.batchId,
                 "numInputRows": p.numInputRows,
                 "inputRowsPerSecond": p.inputRowsPerSecond,
                 "durationMs": dict(p.durationMs) if p.durationMs else {},
+                # State-store cost of the batch, summed over stateful
+                # operators: store instances opened (one per shuffle
+                # partition per evaluation of the plan), commit time and
+                # rows held after the commit.
+                "numStateStoreInstances": sum(
+                    o.numStateStoreInstances for o in ops
+                ),
+                "commitTimeMs": sum(o.commitTimeMs for o in ops),
+                "numRowsTotal": sum(o.numRowsTotal for o in ops),
             }
         )
 

@@ -20,7 +20,8 @@ from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
+
+from big_data_streaming_spark.streaming.sinks import persisted_nonempty
 
 
 def route_partitioned(
@@ -73,24 +74,18 @@ def foreach_batch_router(
     ``write_partition(slice_df, key_tuple, batch_id)`` is invoked once per
     distinct key combination present in the batch (e.g. open a JDBC
     connection to the per-coin database — reference A18/A21 semantics).
-    The batch is persisted first (SURVEY.md §4.3.1), so the distinct scan
-    and every per-key slice hit cached blocks, not the source.
+    The batch is persisted before anything reads it (SURVEY.md §4.3.1,
+    :func:`~big_data_streaming_spark.streaming.sinks.persisted_nonempty`),
+    so the empty-batch probe, the distinct scan and every per-key slice
+    hit cached blocks, not the source.
     """
 
     def route(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        batch.persist(StorageLevel.MEMORY_AND_DISK)
-        try:
-            present = [
-                tuple(r) for r in batch.select(*keys).distinct().collect()
-            ]
-            for key_tuple in sorted(present):
-                cond = F.lit(True)
-                for k, v in zip(keys, key_tuple):
-                    cond = cond & (F.col(k) == F.lit(v))
-                write_partition(batch.filter(cond), key_tuple, batch_id)
-        finally:
-            batch.unpersist()
+        present = [tuple(r) for r in batch.select(*keys).distinct().collect()]
+        for key_tuple in sorted(present):
+            cond = F.lit(True)
+            for k, v in zip(keys, key_tuple):
+                cond = cond & (F.col(k) == F.lit(v))
+            write_partition(batch.filter(cond), key_tuple, batch_id)
 
-    return route
+    return persisted_nonempty(route)

@@ -127,6 +127,61 @@ def start_foreach_batch(
     return writer.start()
 
 
+def persisted_nonempty(
+    fn: Callable[[DataFrame, int], None],
+) -> Callable[[DataFrame, int], None]:
+    """Wrap a ``foreachBatch`` callback so the micro-batch runs ONCE: the
+    batch is persisted before the ``isEmpty`` probe, so the probe and
+    every action in ``fn`` read cached blocks instead of re-running the
+    plan (for a stateful query that is the source read, the shuffle and
+    the state-store load and commit, per action). Empty batches skip
+    ``fn``; the batch is unpersisted in ``finally`` so nothing stays
+    pinned between batches."""
+
+    def wrapped(batch: DataFrame, batch_id: int) -> None:
+        batch.persist(StorageLevel.MEMORY_AND_DISK)
+        try:
+            if not batch.isEmpty():
+                fn(batch, batch_id)
+        finally:
+            batch.unpersist()
+
+    return wrapped
+
+
+def window_topk_sink(
+    out_dir: str, *, key: str, value: str, k: int
+) -> Callable[[DataFrame, int], None]:
+    """``foreachBatch`` ranker for an append-mode windowed aggregate with
+    columns ``(w, key, value)``: each batch holds only watermark-finalized
+    windows, so it ranks each window's rows by ``value`` descending (ties
+    by ``key``), keeps the top ``k`` and writes them as
+    ``out_dir/batch_<id>/`` parquet with columns
+    ``(window_start, key, value, rk)``.
+
+    One subdir per micro-batch in OVERWRITE mode: a batch replayed from
+    the WAL after a crash rewrites its own dir instead of double-appending
+    (the same idempotence contract as :func:`write_jdbc_idempotent`).
+    Runs under :func:`persisted_nonempty`, so the batch is evaluated once.
+    """
+    import os
+
+    from pyspark.sql import functions as F
+    from pyspark.sql.window import Window
+
+    def rank_and_append(batch: DataFrame, batch_id: int) -> None:
+        rw = Window.partitionBy("w").orderBy(F.desc(value), key)
+        (
+            batch.withColumn("rk", F.row_number().over(rw).cast("bigint"))
+            .filter(F.col("rk") <= k)
+            .select(F.col("w.start").alias("window_start"), key, value, "rk")
+            .write.mode("overwrite")
+            .parquet(os.path.join(out_dir, f"batch_{batch_id}"))
+        )
+
+    return persisted_nonempty(rank_and_append)
+
+
 def write_jdbc_append(
     df: DataFrame,
     url: str,

@@ -942,12 +942,11 @@ def q_stream_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_stream_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.window import Window
-
     from big_data_streaming_spark.sources.catalog import (
         _ensure_session_confs,
         normalize_raw_timestamps,
     )
+    from big_data_streaming_spark.streaming.sinks import window_topk_sink
 
     _ensure_session_confs(spark)
     src_dir = _stage_stream_dir(sf_dir, "events")
@@ -969,35 +968,13 @@ def q_stream_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(dec_sum("value", "total_value"))
     )
 
-    def rank_and_append(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        rw = Window.partitionBy("w").orderBy(
-            F.desc("total_value"), "event_type"
-        )
-        (
-            batch_df.withColumn("rk", F.row_number().over(rw).cast("bigint"))
-            .filter(F.col("rk") <= 3)
-            .select(
-                F.col("w.start").alias("window_start"),
-                "event_type",
-                "total_value",
-                "rk",
-            )
-            # One subdir per micro-batch, OVERWRITE mode: a batch replayed
-            # from the WAL after a crash rewrites its own dir instead of
-            # double-appending — the same idempotence contract as the avro
-            # streaming sink (sources/avro_datasource.py) and the
-            # delete-then-insert JDBC sink (streaming/sinks.py).
-            .write.mode("overwrite")
-            .parquet(os.path.join(out_dir, f"batch_{batch_id}"))
-        )
-
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", _stream_shuffle())
     try:
         q = (
-            agg.writeStream.foreachBatch(rank_and_append)
+            agg.writeStream.foreachBatch(
+                window_topk_sink(out_dir, key="event_type", value="total_value", k=3)
+            )
             .outputMode("append")
             .option("checkpointLocation", ckpt_dir)
             .trigger(availableNow=True)

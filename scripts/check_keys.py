@@ -19,6 +19,17 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 
+def canonical(df) -> tuple[list[str], list[str]]:
+    """A result frame in comparable form: its lower-cased column names,
+    sorted, and its rows stringified in that column order, sorted.
+    Names compare case-insensitively, so they also sort case-insensitively
+    (a case-sensitive sort puts ``B`` before ``a`` in one frame and ``b``
+    after ``A`` in the other, misaligning equal rows)."""
+    df = df.rename(columns=str.lower)
+    cols = sorted(df.columns)
+    return cols, sorted(map(str, df[cols].astype(str).values.tolist()))
+
+
 def main() -> None:
     sf_dir = sys.argv[1]
     keys = sys.argv[2:]
@@ -50,22 +61,15 @@ def main() -> None:
 
     rc = 0
     for name in keys:
-        s = qs[name](spark, sf_dir).toPandas()
-        sv = sorted(map(str, s[sorted(s.columns)].astype(str).values.tolist()))
+        s_cols, sv = canonical(qs[name](spark, sf_dir).toPandas())
         if name not in oracles:
             h = hashlib.md5("\n".join(sv).encode()).hexdigest()[:16]
-            print(json.dumps({"key": name, "rows": len(s), "row_hash": h,
+            print(json.dumps({"key": name, "rows": len(sv), "row_hash": h,
                               "status": "rows-only"}))
             continue
-        o = con.execute(oracles[name]).fetch_df()
-        ov = sorted(map(str, o[sorted(o.columns)].astype(str).values.tolist()))
-        ok = (
-            len(s) == len(o)
-            and sorted(c.lower() for c in s.columns)
-            == sorted(c.lower() for c in o.columns)
-            and sv == ov
-        )
-        print(json.dumps({"key": name, "rows": len(s),
+        o_cols, ov = canonical(con.execute(oracles[name]).fetch_df())
+        ok = s_cols == o_cols and sv == ov
+        print(json.dumps({"key": name, "rows": len(sv),
                           "status": "green" if ok else "MISMATCH"}))
         if not ok:
             rc = 1

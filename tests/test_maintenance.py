@@ -85,6 +85,65 @@ def test_streaming_progress_listener(spark, tmp_path):
         collector.uninstall(spark)
 
 
+def test_progress_collector_sums_state_operators():
+    """Per-batch state-store counters are summed over the stateful
+    operators of a progress event (no session needed: the event is built
+    from the progress JSON the engine emits)."""
+    from pyspark.sql.streaming.listener import QueryProgressEvent
+
+    def op(name: str, instances: int, commit_ms: int, rows: int) -> dict:
+        return {
+            "operatorName": name,
+            "numRowsTotal": rows,
+            "numRowsUpdated": 0,
+            "numRowsRemoved": 0,
+            "allUpdatesTimeMs": 0,
+            "allRemovalsTimeMs": 0,
+            "commitTimeMs": commit_ms,
+            "memoryUsedBytes": 0,
+            "numRowsDroppedByWatermark": 0,
+            "numShufflePartitions": instances,
+            "numStateStoreInstances": instances,
+        }
+
+    def progress(batch_id: int, ops: list[dict]) -> dict:
+        return {
+            "id": "00000000-0000-0000-0000-000000000001",
+            "runId": "00000000-0000-0000-0000-000000000002",
+            "name": "topk",
+            "timestamp": "2024-01-01T00:00:00.000Z",
+            "batchId": batch_id,
+            "batchDuration": 10,
+            "durationMs": {"addBatch": 7, "triggerExecution": 10},
+            "stateOperators": ops,
+            "sources": [],
+            "sink": {"description": "ForeachBatchSink", "numOutputRows": -1},
+            "numInputRows": 100,
+            "inputRowsPerSecond": 1.0,
+            "processedRowsPerSecond": 1.0,
+        }
+
+    c = ProgressCollector()
+    c.onQueryProgress(
+        QueryProgressEvent.fromJson(
+            {"progress": progress(0, [op("stateStoreSave", 1, 30, 20), op("dedupe", 2, 12, 5)])}
+        )
+    )
+    c.onQueryProgress(QueryProgressEvent.fromJson({"progress": progress(1, [])}))
+
+    first, stateless = c.stats["topk"]
+    assert first["batchId"] == 0 and first["durationMs"]["addBatch"] == 7
+    assert first["numStateStoreInstances"] == 3
+    assert first["commitTimeMs"] == 42
+    assert first["numRowsTotal"] == 25
+    assert (
+        stateless["numStateStoreInstances"],
+        stateless["commitTimeMs"],
+        stateless["numRowsTotal"],
+    ) == (0, 0, 0)
+    assert c.total_rows("topk") == 200
+
+
 def test_kline_decimal_schema_exact_money(spark):
     """The DECIMAL(38,18) money path (SURVEY.md §4.3.7): string decimals
     parse losslessly — including values a double cannot represent."""

@@ -120,6 +120,7 @@ def test_live_topk_demo(spark, tmp_path):
     )
 
     out = str(tmp_path / "serving")
+    partitions_before = spark.conf.get("spark.sql.shuffle.partitions")
     q = run_live_topk(
         spark,
         out,
@@ -130,7 +131,19 @@ def test_live_topk_demo(spark, tmp_path):
         watermark="10 minutes",
         k=3,
     )
+    # The one-partition pin is scoped to the query's start.
+    assert spark.conf.get("spark.sql.shuffle.partitions") == partitions_before
     drain_until_idle(q)
+
+    # One state store per data batch: one shuffle partition, and the
+    # foreachBatch ranker evaluates the stateful plan once (each extra
+    # evaluation opens and commits every store again).
+    data = [p for p in q.recentProgress if p["numInputRows"] > 0]
+    assert len(data) == 6
+    for p in data:
+        assert (
+            sum(o["numStateStoreInstances"] for o in p["stateOperators"]) == 1
+        ), p["stateOperators"]
 
     got = sorted(
         (

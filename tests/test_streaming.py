@@ -8,6 +8,7 @@ from __future__ import annotations
 import json
 import os
 
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -227,11 +228,27 @@ def test_checkpoint_resume_no_duplicates(spark, tmp_path, kline_batch):
 
 def test_foreach_batch_router_single_scan(spark, tmp_path, kline_batch):
     """A20 single-pass router: per-(coin, interval) sinks written off ONE
-    persisted scan; read-back per key matches the input slice."""
+    persisted scan; read-back per key matches the input slice.
+
+    A pass-through UDF on the parsed stream logs how many rows it
+    evaluates. It sits in a filter, so no column pruning can drop it from
+    a plan that reads the batch. The router's own persist (the sink
+    wrapper's is switched off) must let the empty-batch probe, the
+    distinct scan and the per-key writes share one evaluation of each
+    input row. The count goes to a file, not an accumulator: updates from
+    a task whose output ``isEmpty``'s limit cuts short never reach the
+    driver, so an accumulator misses exactly the re-run this guards."""
     src = str(tmp_path / "src")
     write_jsonl(src, "a.jsonl", kline_batch)
     outbase = str(tmp_path / "routed")
     written: list[tuple] = []
+    evaluated = str(tmp_path / "evaluated.log")
+
+    @F.pandas_udf("string")
+    def tap(coin: pd.Series) -> pd.Series:
+        with open(evaluated, "a") as f:
+            f.write(f"{len(coin)}\n")
+        return coin
 
     def write_partition(slice_df, key_tuple, batch_id):
         coin, interval = key_tuple
@@ -240,15 +257,19 @@ def test_foreach_batch_router_single_scan(spark, tmp_path, kline_batch):
         written.append(key_tuple)
 
     parsed = parse_klines(raw_text_file_stream(spark, src))
+    parsed = parsed.filter(tap("coin").isNotNull())
     q = start_foreach_batch(
         parsed,
         foreach_batch_router(["coin", "interval"], write_partition),
         checkpoint=str(tmp_path / "ckpt"),
         trigger={"availableNow": True},
+        persist_batches=False,
     )
     q.awaitTermination()
 
     assert sorted(set(written)) == sorted((c, "1m") for c in COINS)
+    with open(evaluated) as f:
+        assert sum(int(n) for n in f) == len(kline_batch)
     one = spark.read.parquet(os.path.join(outbase, "BTCUSDC_1m"))
     assert one.count() == 120
     assert one.select("coin").distinct().collect()[0]["coin"] == "BTCUSDC"

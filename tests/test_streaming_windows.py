@@ -186,12 +186,10 @@ def test_stream_topk_replay_converges(spark, sf_small, tmp_path):
     rewrites its own batch_<id> dir (overwrite mode), so applying the
     same batch twice leaves the output identical — the property that
     makes the serving layer exactly-once under crash/restart."""
-    import os
-
     from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
 
     from big_data_streaming_spark.sources.catalog import load_table
+    from big_data_streaming_spark.streaming.sinks import window_topk_sink
 
     out_dir = str(tmp_path / "topk_out")
     batch = (
@@ -200,15 +198,8 @@ def test_stream_topk_replay_converges(spark, sf_small, tmp_path):
         .agg(F.sum(F.col("value").cast("decimal(38,6)")).cast("double").alias("total_value"))
     )
 
-    def rank_and_write(batch_df, batch_id):
-        rw = Window.partitionBy("w").orderBy(F.desc("total_value"), "event_type")
-        (
-            batch_df.withColumn("rk", F.row_number().over(rw).cast("bigint"))
-            .filter(F.col("rk") <= 3)
-            .select(F.col("w.start").alias("window_start"), "event_type", "total_value", "rk")
-            .write.mode("overwrite")
-            .parquet(os.path.join(out_dir, f"batch_{batch_id}"))
-        )
+    # The ranker q_stream_topk and the live demo run per micro-batch.
+    rank_and_write = window_topk_sink(out_dir, key="event_type", value="total_value", k=3)
 
     rank_and_write(batch, 0)
     first = sorted(map(repr, spark.read.option("recursiveFileLookup", "true").parquet(out_dir).collect()))
